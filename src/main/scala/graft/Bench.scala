@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
+import scala.util.control.NonFatal
+
 /** Benchmark main (driver contract): times every registered query at
   * `SPARK_GRAFT_SF_DIR`, prints ONE JSON line.
   *
@@ -54,25 +56,9 @@ object Bench {
     r
   }
 
-  private[graft] def session(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // pinned TZ: date-bucketing queries must do the same work (same
-      // day boundaries, row counts) regardless of the machine's zone —
-      // and it matches Verify/TimeQ, keeping timings comparable
-      .config("spark.sql.session.timeZone", "UTC")
-      // NOT dead config on micros fixtures (it is a no-op there): this flag
-      // is what makes a TIMESTAMP(NANOS) fixture regen READABLE at all —
-      // Spark 4 otherwise rejects the parquet type, while with the flag it
-      // reads as int64 and Tables.normalizeTs routes it adaptively.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
+  /** The shared [[Session.local]] factory, also used by Verify and the
+    * dev tools (ProfileQ), so their timings are comparable. */
+  private[graft] def session(): SparkSession = Session.local()
 
   /** Sorted-name query list — parent and children derive the shard
     * slices from this same ordering, so no name list crosses the
@@ -138,19 +124,19 @@ object Bench {
     graft.sources.Tables.names.foreach { t =>
       try spark.read.parquet(s"$sfDir/$t.parquet")
         .write.format("noop").mode("overwrite").save()
-      catch { case e: Throwable =>
+      catch { case NonFatal(e) =>
         System.err.println(s"[bench] warmup $t failed: ${e.getMessage}")
       }
     }
     try jitWarm(spark)
-    catch { case e: Throwable =>
+    catch { case NonFatal(e) =>
       System.err.println(s"[bench] jit warmup failed (non-fatal): ${e.getMessage}")
     }
     qs.map { case (name, fn) =>
       // untimed first run: this query's whole-stage codegen compiles
       // here, and any index artifact it reads builds/adopts here
       try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => () } // timed runs below report it
+      catch { case NonFatal(_) => () } // timed runs below report it
       val times = Seq.fill(Reps) {
         val t0 = System.nanoTime()
         // noop sink: fully materializes every row and column (sorts
@@ -160,7 +146,7 @@ object Bench {
         try {
           fn(spark, sfDir).write.format("noop").mode("overwrite").save()
           (System.nanoTime() - t0) / 1e9
-        } catch { case e: Throwable =>
+        } catch { case NonFatal(e) =>
           System.err.println(s"[bench] $name failed: ${e.getMessage}")
           -1.0
         }
@@ -237,7 +223,7 @@ object Bench {
         if (rows.isEmpty) { System.err.println(s"[bench] shard $i returned no rows"); None }
         else Some(rows)
       }
-    } catch { case e: Throwable =>
+    } catch { case NonFatal(e) =>
       System.err.println(s"[bench] fork shard $i failed: ${e.getMessage}")
       None
     } finally java.nio.file.Files.deleteIfExists(out)
@@ -436,7 +422,7 @@ object Bench {
             .getBytes("UTF-8"))
         System.err.println(s"[bench] contended first pass preserved at $contOut")
       }
-    } catch { case e: Throwable =>
+    } catch { case NonFatal(e) =>
       System.err.println(s"[bench] self-publish failed (non-fatal): ${e.getMessage}")
     }
   }

@@ -1,5 +1,7 @@
 package graft
 
+import scala.util.control.NonFatal
+
 /** Pre-builds the persisted [[Indexes]] artifacts the registry's
   * index-backed queries read, attributing the once-per-fixture build
   * cost SEPARATELY from steady-state query cost (r16 VERDICT task 4:
@@ -60,7 +62,7 @@ object IndexWarm {
     names.foreach { n =>
       val (first, steady) =
         try (run(n), run(n))
-        catch { case e: Throwable =>
+        catch { case NonFatal(e) =>
           System.err.println(s"[indexwarm] $n failed: ${e.getMessage}")
           (-1.0, -1.0)
         }

@@ -90,11 +90,12 @@ object Indexes {
       .take(4).map("%02x".format(_)).mkString
 
   /** Visible-for-tests: the catalog name an artifact lands under.
-    * Memoized per sfDir — the fingerprint walk is two directory
-    * listings, but tableName is called on every query construction. */
-  private val slugMemo = new java.util.concurrent.ConcurrentHashMap[String, String]()
+    * Re-fingerprinted on every call, never memoized: a fixture
+    * regenerated under the same path within one JVM must change the
+    * name. The walk is one listing plus one level of children (~10
+    * entries), negligible next to query construction. */
   private[graft] def tableName(sfDir: String, name: String): String =
-    s"graft_idx_${slugMemo.computeIfAbsent(sfDir, slug)}_$name"
+    s"graft_idx_${slug(sfDir)}_$name"
 
   /** Artifact names requested since the last [[resetTouched]] — lets
     * IndexWarmSpec detect queries that build/adopt an artifact at

@@ -1,5 +1,6 @@
 package graft
 
+import graft.sources.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** A named engine query: the Spark implementation plus (optionally) an
@@ -19,6 +20,20 @@ object Q {
   /** Oracled query. */
   def apply(name: String, oracle: String)(fn: (SparkSession, String) => DataFrame): Q =
     Q(name, fn, Some(oracle))
+
+  /** Oracled query whose Spark body IS the oracle text, run through
+    * [[runSql]]: one copy of the SQL serves both engines. */
+  def sql(name: String, text: String): Q = Q(name, text)(runSql(_, _, text))
+
+  /** `s.sql(text)` over temp views of only the tables `text` names
+    * (case-insensitive whole word — a superset of the tables it reads).
+    * Each registered view costs one schema-inference job, so a
+    * one-table query must not register all ten. */
+  def runSql(s: SparkSession, sfDir: String, text: String): DataFrame = {
+    Tables.registerViews(s, sfDir,
+      Tables.names.filter(t => s"(?i)\\b$t\\b".r.findFirstIn(text).isDefined))
+    s.sql(text)
+  }
 
   /** Query with no SQL-expressible oracle (driver records a rows-only check). */
   def noOracle(name: String)(fn: (SparkSession, String) => DataFrame): Q =

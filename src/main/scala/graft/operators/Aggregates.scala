@@ -187,26 +187,15 @@ object Aggregates {
     },
 
     // G12: explicit GROUPING SETS with grouping() disambiguation markers
-    // (entry point B: SQL over registered views; same SQL family as the
-    // oracle modulo the grouping-id cast).
-    Q("grouping_sets",
+    // (entry point B: the oracle text itself, run over registered views).
+    Q.sql("grouping_sets",
       """SELECT l_returnflag, l_linestatus,
         |  CAST(grouping(l_returnflag) AS BIGINT) AS g_flag,
         |  CAST(grouping(l_linestatus) AS BIGINT) AS g_status,
         |  COUNT(*) AS n
         |FROM lineitem
         |GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())
-        |ORDER BY l_returnflag NULLS FIRST, l_linestatus NULLS FIRST""".stripMargin) { (s, d) =>
-      Tables.lineitem(s, d).createOrReplaceTempView("lineitem")
-      s.sql(
-        """SELECT l_returnflag, l_linestatus,
-          |  CAST(grouping(l_returnflag) AS BIGINT) AS g_flag,
-          |  CAST(grouping(l_linestatus) AS BIGINT) AS g_status,
-          |  COUNT(*) AS n
-          |FROM lineitem
-          |GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())
-          |ORDER BY l_returnflag NULLS FIRST, l_linestatus NULLS FIRST""".stripMargin)
-    },
+        |ORDER BY l_returnflag NULLS FIRST, l_linestatus NULLS FIRST""".stripMargin),
 
     // G31: metadata-only statistics — global COUNT/MIN/MAX answered from
     // parquet FOOTERS, zero data pages read. At 100 TB this turns a

@@ -296,21 +296,13 @@ object Analytics {
     },
 
     // EXISTS / NOT EXISTS correlated subqueries (plan: semi + anti join).
-    Q("subquery_exists",
+    Q.sql("subquery_exists",
       """SELECT c.c_custkey, c.c_name,
         |  EXISTS (SELECT 1 FROM orders o
         |          WHERE o.o_custkey = c.c_custkey AND o.o_orderstatus = 'O') AS has_open
         |FROM customer c
         |WHERE EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)
-        |ORDER BY c.c_custkey""".stripMargin) { (s, d) =>
-      Tables.registerViews(s, d)
-      s.sql("""SELECT c.c_custkey, c.c_name,
-              |  EXISTS (SELECT 1 FROM orders o
-              |          WHERE o.o_custkey = c.c_custkey AND o.o_orderstatus = 'O') AS has_open
-              |FROM customer c
-              |WHERE EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)
-              |ORDER BY c.c_custkey""".stripMargin)
-    },
+        |ORDER BY c.c_custkey""".stripMargin),
 
     // String-distance pairs (fuzzy-dedup verify step): levenshtein over
     // bounded prefixes of adjacent docs — edit distance is O(len²),
@@ -570,7 +562,7 @@ object Analytics {
     // an anti join against the filtered orders subset. The avg is
     // spelled sum(DECIMAL)/count so both engines do identical final
     // arithmetic.
-    Q("tpch_q22ish",
+    Q.sql("tpch_q22ish",
       """SELECT n.n_name, count(*) AS numcust,
         |  CAST(SUM(CAST(c.c_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS totacctbal
         |FROM customer c JOIN nation n ON n.n_nationkey = c.c_nationkey
@@ -581,20 +573,7 @@ object Analytics {
         |    SELECT 1 FROM orders o
         |    WHERE o.o_custkey = c.c_custkey AND o.o_orderstatus = 'F')
         |GROUP BY n.n_name
-        |ORDER BY n_name""".stripMargin) { (s, d) =>
-      Tables.registerViews(s, d)
-      s.sql("""SELECT n.n_name, count(*) AS numcust,
-              |  CAST(SUM(CAST(c.c_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS totacctbal
-              |FROM customer c JOIN nation n ON n.n_nationkey = c.c_nationkey
-              |WHERE c.c_acctbal > (
-              |    SELECT CAST(SUM(CAST(c2.c_acctbal AS DECIMAL(18,2))) AS DOUBLE) / COUNT(*)
-              |    FROM customer c2 WHERE c2.c_acctbal > 0)
-              |  AND NOT EXISTS (
-              |    SELECT 1 FROM orders o
-              |    WHERE o.o_custkey = c.c_custkey AND o.o_orderstatus = 'F')
-              |GROUP BY n.n_name
-              |ORDER BY n_name""".stripMargin)
-    },
+        |ORDER BY n_name""".stripMargin),
 
     // TPC-H Q5-style: full star traversal (region → nation → customer →
     // orders → lineitem ⋈ supplier with co-nation constraint), revenue
@@ -632,21 +611,13 @@ object Analytics {
     // l_partkey; no arithmetic beyond the min itself, so the compare
     // is raw stored doubles (bit-identical both engines). The part
     // filter stands in for Q2's region cut and bounds the output.
-    Q("tpch_q2ish",
+    Q.sql("tpch_q2ish",
       """SELECT l.l_partkey, l.l_suppkey, l.l_extendedprice
         |FROM lineitem l
         |WHERE l.l_partkey < 200 AND l.l_extendedprice = (
         |  SELECT min(l2.l_extendedprice) FROM lineitem l2
         |  WHERE l2.l_partkey = l.l_partkey)
-        |ORDER BY l_partkey, l_suppkey""".stripMargin) { (s, d) =>
-      Tables.registerViews(s, d)
-      s.sql("""SELECT l.l_partkey, l.l_suppkey, l.l_extendedprice
-              |FROM lineitem l
-              |WHERE l.l_partkey < 200 AND l.l_extendedprice = (
-              |  SELECT min(l2.l_extendedprice) FROM lineitem l2
-              |  WHERE l2.l_partkey = l.l_partkey)
-              |ORDER BY l_partkey, l_suppkey""".stripMargin)
-    },
+        |ORDER BY l_partkey, l_suppkey""".stripMargin),
 
     // TPC-H Q11-style: group HAVING against a GLOBAL scalar — suppliers
     // whose lineitem value exceeds 1.05× the average supplier value.

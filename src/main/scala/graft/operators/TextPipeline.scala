@@ -81,10 +81,9 @@ object TextPipeline {
     // generator — the engine's UDTF surface (G20).
     Q("sql_entry_ngrams", ngramCountSql(2)) { (s, d) =>
       graft.functions.GraftFunctions.register(s)
-      Tables.registerViews(s, d)
-      s.sql("""SELECT ngram, count(*) AS cnt
-              |FROM (SELECT explode(ngrams(text, 2)) AS ngram FROM documents)
-              |GROUP BY ngram ORDER BY ngram""".stripMargin)
+      Q.runSql(s, d, """SELECT ngram, count(*) AS cnt
+                     |FROM (SELECT explode(ngrams(text, 2)) AS ngram FROM documents)
+                     |GROUP BY ngram ORDER BY ngram""".stripMargin)
     },
     // `n` as a foldable CONSTANT EXPRESSION rather than a bare literal
     // (`1 + 1` folds at resolution) — parity with the reference's
@@ -93,10 +92,9 @@ object TextPipeline {
     // form the templating produced.
     Q("sql_entry_ngrams_fold", ngramCountSql(2)) { (s, d) =>
       graft.functions.GraftFunctions.register(s)
-      Tables.registerViews(s, d)
-      s.sql("""SELECT ngram, count(*) AS cnt
-              |FROM (SELECT explode(ngrams(text, 1 + 1)) AS ngram FROM documents)
-              |GROUP BY ngram ORDER BY ngram""".stripMargin)
+      Q.runSql(s, d, """SELECT ngram, count(*) AS cnt
+                     |FROM (SELECT explode(ngrams(text, 1 + 1)) AS ngram FROM documents)
+                     |GROUP BY ngram ORDER BY ngram""".stripMargin)
     }
   )
 }

@@ -285,7 +285,8 @@ object Tables {
   def documents(s: SparkSession, d: String): DataFrame = apply(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = apply(s, d, "embeddings")
 
-  /** Register every table as a temp view (entry point B: SQL over views).
+  /** Register `tables` (default: every table) as temp views (entry point
+    * B: SQL over views).
     * Views load through [[apply]], so the SQL surface sees the same
     * normalized microsecond timestamps as the DataFrame surface.
     *
@@ -296,8 +297,9 @@ object Tables {
     * queries over it then fail at analysis with TABLE_OR_VIEW_NOT_FOUND
     * while every other view keeps working. Returns the per-table load
     * errors so callers can surface them. */
-  def registerViews(spark: SparkSession, sfDir: String): Map[String, Throwable] =
-    names.flatMap { n =>
+  def registerViews(spark: SparkSession, sfDir: String,
+                    tables: Seq[String] = names): Map[String, Throwable] =
+    tables.flatMap { n =>
       try {
         apply(spark, sfDir, n).createOrReplaceTempView(n)
         None

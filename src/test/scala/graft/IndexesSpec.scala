@@ -98,6 +98,25 @@ class IndexesSpec extends AnyFunSuite {
     assert(builds == 2, "a changed bucket spec must force a rebuild")
   }
 
+  test("a fixture regenerated under the same path gets a new artifact name") {
+    import java.nio.file.{Files, Paths, StandardCopyOption}
+    val dir = Files.createTempDirectory("graft-regen")
+    try {
+      val src = Paths.get(sf0001)
+      Seq("region", "nation").foreach(t =>
+        Files.copy(src.resolve(s"$t.parquet"), dir.resolve(s"$t.parquet")))
+      val before = Indexes.tableName(dir.toString, "spec_regen")
+      // same JVM, same path, one input rewritten to a different size
+      Files.copy(src.resolve("nation.parquet"), dir.resolve("region.parquet"),
+        StandardCopyOption.REPLACE_EXISTING)
+      assert(Indexes.tableName(dir.toString, "spec_regen") != before,
+        "a regenerated input must never be served the old artifact")
+    } finally {
+      Files.list(dir).forEach(Files.delete(_))
+      Files.delete(dir)
+    }
+  }
+
   test("persisted co-order pair table equals the inline self-join") {
     val li = sources.Tables.lineitem(spark, sf0001)
       .select(col("l_orderkey"), col("l_partkey"))

@@ -1,5 +1,7 @@
 package graft
 
+import scala.util.control.NonFatal
+
 /** Dev tool: count FileScan nodes per query's STATIC plan, flagging
   * candidates for the one-pass/AQE-reuse treatment bm25_rank got in
   * r14 (a static double-scan is only a problem when the subtrees are
@@ -37,7 +39,7 @@ object ScanAudit {
           Some((n, perTable.values.sum,
             repeated.toSeq.sorted.map { case (t, c) => s"$t x$c" }.mkString(", ")))
         else None
-      } catch { case e: Throwable => println(s"[scanaudit] $n THREW: ${e.getMessage.take(80)}"); None }
+      } catch { case NonFatal(e) => println(s"[scanaudit] $n THREW: ${e.getMessage.take(80)}"); None }
     }
     rows.sortBy(-_._2).foreach { case (n, s, rep) =>
       println(f"[scanaudit] $n%-34s totalScans=$s%-3d repeated: $rep")

@@ -1,7 +1,8 @@
 #!/usr/bin/env python3
 """Regenerate the README query cross-index from source.
 
-Scans src/main/scala/graft for Q("name")/Q.noOracle("name") registrations,
+Scans src/main/scala/graft for Q("name")/Q.sql("name")/Q.noOracle("name")
+registrations (Q.sql is oracled: its SQL text is the oracle),
 attaches the nearest preceding survey-row tag comment (e.g. `// X51:` or
 `** G22:`), and the test suites under src/test that mention the query by
 name. Writes the table between the QUERY_INDEX markers in README.md.
@@ -21,7 +22,7 @@ TEST = ROOT / "src/test/scala/graft"
 BEGIN = "<!-- QUERY_INDEX_BEGIN (generated by tools/readme_index.py) -->"
 END = "<!-- QUERY_INDEX_END -->"
 
-QDEF = re.compile(r'Q(?:\.noOracle)?\(\s*"([a-z0-9_]+)"')
+QDEF = re.compile(r'Q(?:\.noOracle|\.sql)?\(\s*"([a-z0-9_]+)"')
 NO_ORACLE = re.compile(r'Q\.noOracle\(\s*"([a-z0-9_]+)"')
 # first survey-row tag on a comment line, in any of the styles the
 # sources use: `// X51:`, `** G22+:`, `(X44)`, `X47b:`
